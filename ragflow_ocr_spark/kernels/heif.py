@@ -76,25 +76,21 @@ def _parse_iloc(data: bytes, body: int, end: int) -> dict[int, list]:
     v, _flags, p = _fullbox(data, body)
     if v > 2:
         raise ValueError("heif iloc version not supported")
-    sizes = data[p]
-    offset_size, length_size = sizes >> 4, sizes & 15
-    base_size = data[p + 1] >> 4
-    index_size = (data[p + 1] & 15) if v in (1, 2) else 0
-    p += 2
-    if v < 2:
-        (count,) = struct.unpack_from(">H", data, p)
-        p += 2
-    else:
-        (count,) = struct.unpack_from(">I", data, p)
-        p += 4
 
     def take(n):
         nonlocal p
-        if n == 0:
-            return 0
+        if p + n > end:
+            raise ValueError("truncated heif iloc")
         val = int.from_bytes(data[p:p + n], "big")
         p += n
         return val
+
+    sizes = take(1)
+    offset_size, length_size = sizes >> 4, sizes & 15
+    sizes = take(1)
+    base_size = sizes >> 4
+    index_size = (sizes & 15) if v in (1, 2) else 0
+    count = take(2 if v < 2 else 4)
 
     items: dict[int, list] = {}
     for _ in range(count):
@@ -120,8 +116,6 @@ def _parse_iloc(data: bytes, body: int, end: int) -> dict[int, list]:
         # method 0: file offsets; method 1: offsets into meta/idat
         # (libheif inlines small payloads this way)
         items[item_id] = (method, extents)
-    if p > end:
-        raise ValueError("truncated heif iloc")
     return items
 
 
@@ -152,29 +146,27 @@ def _parse_iinf(data: bytes, body: int, end: int) -> dict[int, bytes]:
     return types
 
 
-def _parse_ipma(data: bytes, body: int) -> dict[int, list[int]]:
+def _parse_ipma(data: bytes, body: int, end: int) -> dict[int, list[int]]:
     v, flags, p = _fullbox(data, body)
-    (count,) = struct.unpack_from(">I", data, p)
-    p += 4
+
+    def take(n):
+        nonlocal p
+        if p + n > end:
+            raise ValueError("truncated heif ipma")
+        val = int.from_bytes(data[p:p + n], "big")
+        p += n
+        return val
+
+    count = take(4)
     assoc: dict[int, list[int]] = {}
     for _ in range(count):
-        if v < 1:
-            (item_id,) = struct.unpack_from(">H", data, p)
-            p += 2
-        else:
-            (item_id,) = struct.unpack_from(">I", data, p)
-            p += 4
-        n = data[p]
-        p += 1
+        item_id = take(2 if v < 1 else 4)
         idxs = []
-        for _ in range(n):
+        for _ in range(take(1)):
             if flags & 1:
-                (w,) = struct.unpack_from(">H", data, p)
-                p += 2
-                idxs.append(w & 0x7FFF)
+                idxs.append(take(2) & 0x7FFF)
             else:
-                idxs.append(data[p] & 0x7F)
-                p += 1
+                idxs.append(take(1) & 0x7F)
         assoc[item_id] = idxs
     return assoc
 
@@ -186,18 +178,14 @@ def _parse_iref(data: bytes, body: int, end: int) -> dict[tuple[bytes, int], lis
     fmt = ">H" if v == 0 else ">I"
     refs: dict[tuple[bytes, int], list[int]] = {}
     for tag, b, e in _boxes(data, p, end):
-        q = b
-        (from_id,) = struct.unpack_from(fmt, data, q)
-        q += wid
-        (n,) = struct.unpack_from(">H", data, q)
-        q += 2
-        to = []
-        for _ in range(n):
-            (tid,) = struct.unpack_from(fmt, data, q)
-            q += wid
-            to.append(tid)
-        if q > e:
+        if b + wid + 2 > e:
             raise ValueError("truncated heif iref")
+        (from_id,) = struct.unpack_from(fmt, data, b)
+        (n,) = struct.unpack_from(">H", data, b + wid)
+        q = b + wid + 2
+        if q + n * wid > e:
+            raise ValueError("truncated heif iref")
+        to = [struct.unpack_from(fmt, data, q + i * wid)[0] for i in range(n)]
         refs[(tag, from_id)] = to
     return refs
 
@@ -251,7 +239,7 @@ def parse_heif(data: bytes) -> dict:
                     for t3, b3, e3 in _boxes(data, b2, e2):
                         props.append((t3, data[b3:e3]))
                 elif t2 == b"ipma":
-                    ipma = _parse_ipma(data, b2)
+                    ipma = _parse_ipma(data, b2, e2)
     if primary is None or iloc is None or primary not in iloc:
         raise ValueError("heif primary item unresolvable")
 

@@ -9,8 +9,19 @@ same idempotent semantics are implemented over parquet):
 - a completed bucket writes one status row per bucket + its output
   files under ``out/bucket=<b>/`` (dynamic partition overwrite —
   rewriting a bucket is idempotent, exactly like MERGE on the key);
-- resume = LEFT ANTI JOIN of pending buckets against ``done`` rows
-  (J3 in SURVEY.md §2.3) — broadcast, the checkpoint side is tiny.
+- resume = the pages whose bucket has no ``done`` row (J3 in SURVEY.md
+  §2.3). The done set is at most ``n_buckets`` ints, so the job
+  collects it once and filters ``NOT bucket IN (done)`` — the same set
+  semantics as the LEFT ANTI JOIN that ``iceberg_sql.resume_pending_sql``
+  emits (its SQL and goldens are unchanged), without a join.
+
+Neither method here builds a DataFrame from a Python list: a
+``createDataFrame(list)`` is backed by a Python RDD, so every scan of
+it starts Python worker tasks, and each Python task costs 0.15-0.3 s
+of worker CPU before doing any work (PySpark's per-task
+``importlib.invalidate_caches()`` re-reads the central directory of
+``pyspark.zip`` once per cached ``zipimporter``). Both DataFrames are
+built in the JVM instead.
 
 The exact production DDL / MERGE INTO / resume SQL this stands in for
 is emitted by ``spark/iceberg_sql.py`` (golden-pinned in
@@ -27,6 +38,8 @@ CHECKPOINT_SCHEMA = (
     "run_id string, bucket int, n_buckets int, status string, n_docs long, "
     "n_ok long, n_empty long, n_error long, wall_ms long"
 )
+_FIELDS = [tuple(f.split()) for f in CHECKPOINT_SCHEMA.split(", ")]
+_COUNTERS = ("n_docs", "n_ok", "n_empty", "n_error", "wall_ms")
 
 
 class CheckpointStore:
@@ -53,7 +66,7 @@ class CheckpointStore:
         — so a mismatch is refused outright."""
         t = self._table()
         if t is None:
-            return self.spark.createDataFrame([], "bucket int")
+            return self.spark.range(0).select(F.col("id").cast("int").alias("bucket"))
         if "n_buckets" not in t.columns:
             raise ValueError(
                 f"checkpoint at {self.table_dir} predates the n_buckets "
@@ -76,25 +89,19 @@ class CheckpointStore:
 
     def mark_done(self, rows: list[dict], n_buckets: int) -> None:
         """Append completion rows (one per bucket). Parquet append of a
-        handful of rows ⇔ the MERGE INTO of the production path."""
+        handful of rows ⇔ the MERGE INTO of the production path. The
+        rows are literals of a one-row JVM relation (``inline`` of an
+        array of structs), so the append starts no Python task."""
         if not rows:
             return
-        df = self.spark.createDataFrame(
-            [
-                (
-                    r["run_id"],
-                    int(r["bucket"]),
-                    int(n_buckets),
-                    "done",
-                    int(r.get("n_docs", 0)),
-                    int(r.get("n_ok", 0)),
-                    int(r.get("n_empty", 0)),
-                    int(r.get("n_error", 0)),
-                    int(r.get("wall_ms", 0)),
-                )
-                for r in rows
-            ],
-            CHECKPOINT_SCHEMA,
-        )
-        df.coalesce(1).write.mode("append").parquet(self.table_dir)
 
+        def values(r: dict) -> tuple:
+            return (r["run_id"], int(r["bucket"]), int(n_buckets), "done",
+                    *(int(r.get(k, 0)) for k in _COUNTERS))
+
+        structs = [
+            F.struct(*[F.lit(v).cast(t).alias(n) for v, (n, t) in zip(values(r), _FIELDS)])
+            for r in rows
+        ]
+        df = self.spark.range(1).select(F.inline(F.array(*structs)))
+        df.coalesce(1).write.mode("append").parquet(self.table_dir)

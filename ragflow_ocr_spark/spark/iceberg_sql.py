@@ -126,7 +126,10 @@ def resume_pending_sql(
     """The resume anti-join (J3) in SQL form: pending pages are those
     whose bucket has no done row under the same numbering. The bucket
     expression matches the table's partition transform, so Iceberg
-    prunes completed buckets' files at scan time."""
+    prunes completed buckets' files at scan time. The parquet stand-in
+    (``run_extract_job``) collects the done ids and filters
+    ``NOT bucket IN (done)`` instead of joining: the same set, since
+    the done side is at most ``n_buckets`` distinct ints."""
     return (
         f"SELECT p.* FROM {pages} p\n"
         f"LEFT ANTI JOIN (\n"

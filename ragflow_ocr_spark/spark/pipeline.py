@@ -1,23 +1,31 @@
 """End-to-end extraction pipeline (the flagship job — P1 in SURVEY.md
 §2.9, Spark lifecycle in §3.1).
 
-    pages ──(anti-join done buckets)──> size-aware spread ──>
+    pages ──(drop done buckets)──> size-aware spread (one exchange) ──>
     mapInPandas(extract) ──> extracted rows + per-partition metrics
 
 Scale design (SURVEY.md §4):
 - **Size-aware skew spread**: per-document cost is unknown pre-detect
   but correlates with payload bytes. Heavy rows
   (``length(html) > salt_heavy_bytes``) are range-spread to ~one per
-  partition and their partitions scheduled FIRST, while light rows use
-  plain hash(url) — AQE cannot rebalance inside a mapInPandas stage,
-  so this is manual (a 100× skew row otherwise pins one executor at
-  the end of the stage).
+  partition in the lowest partition ids, which are scheduled FIRST,
+  while light rows use plain hash(url) — AQE cannot rebalance inside a
+  mapInPandas stage, so this is manual (a 100× skew row otherwise pins
+  one executor at the end of the stage).
+- **One Python task per core**: a Python task costs 0.15-0.3 s of
+  worker CPU before it does any work (PySpark re-reads ``pyspark.zip``
+  per task; see spark/checkpoint.py), more than a median page's
+  extraction. So the job starts Python tasks only for extraction —
+  ``defaultParallelism`` of them per group — and keeps resume,
+  planning and checkpointing in the JVM: no Python-RDD DataFrame
+  (``createDataFrame(list)``) on the job path.
 - **Projection discipline**: the extract output never carries `html`,
   so every downstream projection prunes payload bytes at the stage
   boundary.
-- **Resume**: work is bucketed by pmod(xxhash64(url), n_buckets);
-  completed buckets are anti-joined out (broadcast — checkpoint side
-  is tiny) and each bucket's output is idempotently overwritten.
+- **Resume**: work is bucketed by pmod(xxhash64(url), n_buckets); the
+  done bucket ids (at most n_buckets ints) are collected once and
+  filtered out with ``NOT bucket IN (done)``, and each bucket's output
+  is idempotently overwritten.
 """
 
 from __future__ import annotations
@@ -36,38 +44,67 @@ from ragflow_ocr_spark.spark.stages import (
 )
 
 
+def _is_heavy(cfg: PipelineConfig):
+    return F.coalesce(F.length(F.col("html")), F.lit(0)) > cfg.salt_heavy_bytes
+
+
 def spread_for_extract(
-    df: DataFrame, n_partitions: int, cfg: PipelineConfig = DEFAULT
+    df: DataFrame,
+    n_partitions: int,
+    cfg: PipelineConfig = DEFAULT,
+    heavy_keys: list[int] | None = None,
 ) -> DataFrame:
-    """Distribute rows so heavy payloads can't gang up on one task.
+    """Distribute rows over exactly ``n_partitions`` partitions, in one
+    exchange, so heavy payloads can't gang up on one task.
 
     A heavy page is ONE row — it cannot be split, so "skew handling"
     here means the heavy subset must land ~evenly across partitions by
     COUNT. Hash repartitioning doesn't guarantee that: when the number
     of heavy rows is comparable to the number of partitions (the
     painful regime — each one is ~100× a median row), balls-in-bins
-    puts 2-3 in one partition and zero in others. ``repartitionByRange``
-    over ``xxhash64(url)`` samples the key distribution and emits
-    near-equal-count ranges → at most ~1 heavy row per partition at
-    the tail, at any scale. Light rows: plain hash(url) repartition.
-    Placement never affects output bytes — rows are independent
-    (verified by the repartition-invariance test).
+    puts 2-3 in one partition and zero in others. So each heavy row
+    gets the index of its equal-count range over the sorted heavy
+    ``xxhash64(url)`` keys: with H heavy rows and m = min(n, H), the
+    row of rank r goes to partition floor(r·m/H) — at most ceil(H/n)
+    heavy rows per partition, and they fill the LOWEST partition ids,
+    which the scheduler issues first. Light rows go to
+    ``pmod(hash(url), n)``. ``repartitionById`` then places every row
+    in its partition with one shuffle. Placement never affects output
+    bytes — rows are independent (verified by the
+    repartition-invariance test).
 
-    Cost note: the where-split evaluates the source twice. That is
-    deliberate — see run_extract_job's docstring for why the heavy
-    scan is metadata-cheap on a real crawl table (content_length
-    row-group pruning); caching payload bytes to avoid it would cost
-    far more at 100 TB.
+    ``heavy_keys`` are the heavy rows' ``xxhash64(url)`` values;
+    ``run_extract_job`` gathers them for every group in its one
+    planning scan. Without them they are collected here, one job. The
+    driver holds one 8-byte key per heavy row: a heavy row carries
+    more than ``salt_heavy_bytes`` of payload, so the keys are at most
+    1/2048 of the payload bytes at the 16 KiB default, and in practice
+    far less (heavy rows are the rare skew tail). A key the list
+    misses still lands in a valid partition; only balance suffers.
+
+    Cost note: exactly ``n_partitions`` Python tasks run the extract
+    stage; with ``n_partitions = defaultParallelism`` that is one per
+    core. Each Python task pays 0.15-0.3 s of worker CPU before it
+    does any work (see spark/checkpoint.py), so the spread must not
+    multiply tasks (the earlier heavy-range ∪ light-hash shape ran
+    2n) and nothing else on the job path may be a Python-RDD
+    DataFrame.
     """
-    cost = F.coalesce(F.length(F.col("html")), F.lit(0))
-    heavy = df.where(cost > cfg.salt_heavy_bytes)
-    light = df.where(cost <= cfg.salt_heavy_bytes)
-    heavy = heavy.repartitionByRange(n_partitions, F.xxhash64(F.col("url")))
-    light = light.repartition(n_partitions, F.col("url"))
-    # heavy FIRST: union concatenates partition lists in order and the
-    # scheduler issues them in order — longest-processing-time-first
-    # keeps the ~100× rows off the stage's tail
-    return heavy.unionByName(light)
+    heavy = _is_heavy(cfg)
+    key = F.xxhash64(F.col("url"))
+    if heavy_keys is None:
+        heavy_keys = [r[0] for r in df.where(heavy).select(key).collect()]
+    keys = sorted(heavy_keys)
+    pid = F.pmod(F.hash(F.col("url")), F.lit(n_partitions))
+    if keys:
+        m = min(n_partitions, len(keys))
+        # partition i starts at heavy rank ceil(i·H/m); a heavy row's
+        # partition is the number of range starts at or below its key
+        starts = F.array(
+            *[F.lit(keys[-(-i * len(keys) // m)]).cast("long") for i in range(1, m)]
+        )
+        pid = F.when(heavy, F.size(F.filter(starts, lambda b: b <= key))).otherwise(pid)
+    return df.repartitionById(n_partitions, pid)
 
 
 def extract(
@@ -116,17 +153,25 @@ def run_extract_job(
     the number of group jobs is n_buckets/group_size, not n_buckets
     (at 100 TB the input is an Iceberg table partitioned by
     ``bucket(url, n_buckets)``, so each scan additionally prunes to
-    the group's files — see spark/checkpoint.py). With ``spread=True``
-    each group is scanned twice (the heavy/light where-split below);
-    at Iceberg scale the heavy predicate runs against a stored
-    ``content_length`` column whose row-group stats prune the heavy
-    scan to the handful of files containing heavy rows, so the second
-    scan is metadata-cheap — worth it to keep 100× rows off the stage
-    tail. The group size is
-    the classic durability/throughput knob: lost work on failure ≤ one
-    group, scan overhead ∝ 1/group_size. Within a group, output lands
-    via dynamic partition overwrite under ``extracted/bucket=<b>`` —
-    rewriting a group is idempotent (MERGE-on-key semantics).
+    the group's files — see spark/checkpoint.py).
+
+    Planning is one scan of the pending pages that returns, per
+    pending bucket, the ``xxhash64(url)`` keys of its heavy rows; with
+    ``spread=True`` each group is then scanned once more, by its
+    extract job, and spread over ``defaultParallelism`` partitions in
+    one exchange using those keys (``spread_for_extract``). The heavy
+    predicate is ``length(html)``, so the payload column is read by the
+    planning scan once per run and by each group's extract job — no
+    sampling job and no second heavy/light scan per group. The group
+    size is the classic durability/throughput knob: lost work on
+    failure ≤ one group, scan overhead ∝ 1/group_size. Within a group,
+    output lands via dynamic partition overwrite under
+    ``extracted/bucket=<b>`` — rewriting a group is idempotent
+    (MERGE-on-key semantics).
+
+    Only the extract stage runs Python tasks, one per partition; the
+    resume filter, planning, metrics read-back and checkpoint append
+    are JVM-only (see spark/checkpoint.py for why that matters).
 
     ``fail_buckets`` injects a simulated failure after any group
     containing one of the listed buckets commits — the resume tests'
@@ -137,13 +182,18 @@ def run_extract_job(
     bucket_of_url = F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")
 
     work = pages.withColumn("bucket", bucket_of_url)
-    done = ckpt.done_buckets(n_buckets)  # raises on a numbering mismatch
-    n_done_prior = done.count()
-    pending = work.join(F.broadcast(done), on="bucket", how="left_anti")
+    # at most n_buckets ints; raises on a numbering mismatch
+    done = [r["bucket"] for r in ckpt.done_buckets(n_buckets).collect()]
+    pending = work.where(~F.col("bucket").isin(done))
 
-    pending_buckets = sorted(
-        r["bucket"] for r in pending.select("bucket").distinct().collect()
-    )
+    heavy_key = F.when(_is_heavy(cfg), F.xxhash64(F.col("url")))
+    heavy_by_bucket = {
+        r["bucket"]: r["heavy"]
+        for r in pending.groupBy("bucket")
+        .agg(F.collect_list(heavy_key).alias("heavy"))
+        .collect()
+    }
+    pending_buckets = sorted(heavy_by_bucket)
     gs = max(1, bucket_group_size)
     groups = [pending_buckets[i : i + gs] for i in range(0, len(pending_buckets), gs)]
 
@@ -158,7 +208,7 @@ def run_extract_job(
     n_processed = 0
     try:
         _run_groups(
-            spark, ckpt, groups, pending, run_id, n_buckets,
+            spark, ckpt, groups, pending, heavy_by_bucket, run_id, n_buckets,
             cfg, fail_buckets, spread, out_root,
         )
         n_processed = sum(len(g) for g in groups)
@@ -172,12 +222,12 @@ def run_extract_job(
         "buckets_processed": n_processed,
         # buckets with a prior 'done' checkpoint row — NOT n_buckets −
         # pending (that would count never-populated buckets as skipped)
-        "buckets_skipped": n_done_prior,
+        "buckets_skipped": len(done),
     }
 
 
 def _run_groups(
-    spark, ckpt, groups, pending, run_id, n_buckets,
+    spark, ckpt, groups, pending, heavy_by_bucket, run_id, n_buckets,
     cfg, fail_buckets, spread, out_root,
 ) -> None:
     import json
@@ -186,7 +236,8 @@ def _run_groups(
         gdf = pending.where(F.col("bucket").isin([int(b) for b in group]))
         if spread:
             gdf = spread_for_extract(
-                gdf, spark.sparkContext.defaultParallelism, cfg
+                gdf, spark.sparkContext.defaultParallelism, cfg,
+                heavy_keys=[k for b in group for k in heavy_by_bucket[b]],
             )
         out = gdf.select("url", "warc_ts", "lang", "html", "bucket").mapInPandas(
             extract_stage_with_metrics(cfg, run_id, with_buckets=True),

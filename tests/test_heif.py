@@ -270,3 +270,52 @@ def test_avif_header_parse_rejects_garbage():
     # truncated leb128 size
     with pytest.raises(ValueError):
         heif.parse_av1_sequence_header(bytes([0x0A, 0xFF]))
+
+
+def _box_chain(data: bytes, tag: bytes) -> list[tuple[int, int]]:
+    """(start, end) of every box from the top level down to the first
+    ``tag`` box inside meta / iprp."""
+    def walk(lo, hi, chain):
+        for t, b, e in heif._boxes(data, lo, hi):
+            here = chain + [(b - 8, e)]
+            if t == tag:
+                return here
+            inner = b + 4 if t == b"meta" else b if t == b"iprp" else None
+            if inner is not None:
+                found = walk(inner, e, here)
+                if found:
+                    return found
+        return None
+    chain = walk(0, len(data), [])
+    assert chain, tag
+    return chain
+
+
+@pytest.mark.parametrize("seed,tag", [
+    ("a", b"iloc"), ("a", b"ipma"), ("m10", b"iloc"), ("m10", b"ipma"),
+    ("c", b"iloc"), ("c", b"ipma"), ("c", b"iref"),  # c: grid with iref
+])
+def test_truncated_item_boxes_are_a_row_status(seed, tag):
+    """Cut a committed HEIC's iloc/ipma/iref box at every offset inside
+    it. Each cut is tried two ways: the file ending there, and the box
+    ending there with every enclosing box size shrunk to match (so the
+    container stays well formed and the box parser itself meets the
+    short box). Through the payload router both must give a per-row
+    ``(kind, None)``, never an exception: one bad row may not fail a
+    Spark task."""
+    import os
+
+    from ragflow_ocr_spark.kernels.ocr_pipeline import decode_payload_image
+
+    fix = os.path.join(os.path.dirname(__file__), "fixtures",
+                       f"heic_cabac_{seed}.heic")
+    data = open(fix, "rb").read()
+    chain = _box_chain(data, tag)
+    start, end = chain[-1]
+    for k in range(start + 8, end):
+        shrunk = bytearray(data[:k] + data[end:])
+        for s, _e in chain:
+            (size,) = struct.unpack_from(">I", shrunk, s)
+            struct.pack_into(">I", shrunk, s, size - (end - k))
+        for payload in (data[:k], bytes(shrunk)):
+            assert decode_payload_image(payload) == ("heic", None), k

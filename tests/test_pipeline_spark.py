@@ -157,6 +157,16 @@ def test_spread_heavy_rows(spark, truth):
     )
 
 
+@pytest.mark.parametrize("n", [3, 8])
+def test_spread_is_one_exchange_of_n_partitions(truth, n):
+    """The spread must give exactly n partitions (one Python task per
+    partition downstream), not a heavy ∪ light union of 2n."""
+    from ragflow_ocr_spark.spark.pipeline import spread_for_extract
+
+    pages = truth.select("url", "warc_ts", "html", "text", "lang")
+    assert spread_for_extract(pages, n).rdd.getNumPartitions() == n
+
+
 def test_semantic_truth_at_1000_rows(spark):
     """Constructive-truth byte-identity at 5× the golden corpus size —
     more rng draws hit more glyph/layout/boilerplate branches than the

@@ -147,3 +147,40 @@ def test_buckets_skipped_counts_prior_done_only(spark, pages, tmp_path):
     s2 = run_extract_job(spark, pages, root, n_buckets=64)
     assert s2["buckets_skipped"] == s1["buckets_processed"]
     assert s2["buckets_processed"] == 0
+
+
+def test_job_starts_no_python_rdd(spark, pages, tmp_path, monkeypatch):
+    """Only the extract stage may start Python tasks: a DataFrame built
+    from a Python list (or a silent non-Arrow fallback) is a Python RDD
+    whose every scan costs Python tasks. Fresh and resumed runs must
+    complete with ``SparkContext.parallelize`` refused."""
+    from pyspark import SparkContext
+
+    pages.count()  # materialise the cached fixture first
+
+    def refuse(*_a, **_k):
+        raise AssertionError("Python-RDD DataFrame on the job path")
+
+    monkeypatch.setattr(SparkContext, "parallelize", refuse)
+    fresh = str(tmp_path / "fresh")
+    run_extract_job(spark, pages, fresh, n_buckets=N_BUCKETS, bucket_group_size=3)
+    assert read_extracted(spark, fresh).count() == N_ROWS
+
+    resumed = str(tmp_path / "resumed")
+    first = min(
+        r["bucket"]
+        for r in pages.select(
+            F.pmod(F.xxhash64("url"), F.lit(N_BUCKETS)).cast("int").alias("bucket")
+        ).collect()
+    )
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_extract_job(
+            spark, pages, resumed, n_buckets=N_BUCKETS,
+            fail_buckets={first}, bucket_group_size=3,
+        )
+    summary = run_extract_job(
+        spark, pages, resumed, n_buckets=N_BUCKETS, bucket_group_size=3
+    )
+    assert summary["buckets_skipped"] > 0
+    urls = [r["url"] for r in read_extracted(spark, resumed).select("url").collect()]
+    assert len(urls) == N_ROWS and len(set(urls)) == N_ROWS
