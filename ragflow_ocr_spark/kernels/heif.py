@@ -61,6 +61,22 @@ def _fullbox(data: bytes, body: int) -> tuple[int, int, int]:
     return v, flags, body + 4
 
 
+class _Reader:
+    """Big-endian unsigned reads from ``data[p:end]`` that raise
+    ``ValueError("truncated heif <box>")`` instead of reading past the
+    box (IndexError, struct.error or a silently short value)."""
+
+    def __init__(self, data: bytes, p: int, end: int, box: str):
+        self.data, self.p, self.end, self.box = data, p, end, box
+
+    def take(self, n: int) -> int:
+        if self.p + n > self.end:
+            raise ValueError(f"truncated heif {self.box}")
+        val = int.from_bytes(self.data[self.p:self.p + n], "big")
+        self.p += n
+        return val
+
+
 def sniff_heif_brand(data: bytes) -> str | None:
     """'heic' / 'avif' / None from the ftyp major brand."""
     if len(data) >= 12 and data[4:8] == b"ftyp":
@@ -76,15 +92,7 @@ def _parse_iloc(data: bytes, body: int, end: int) -> dict[int, list]:
     v, _flags, p = _fullbox(data, body)
     if v > 2:
         raise ValueError("heif iloc version not supported")
-
-    def take(n):
-        nonlocal p
-        if p + n > end:
-            raise ValueError("truncated heif iloc")
-        val = int.from_bytes(data[p:p + n], "big")
-        p += n
-        return val
-
+    take = _Reader(data, p, end, "iloc").take
     sizes = take(1)
     offset_size, length_size = sizes >> 4, sizes & 15
     sizes = take(1)
@@ -148,15 +156,7 @@ def _parse_iinf(data: bytes, body: int, end: int) -> dict[int, bytes]:
 
 def _parse_ipma(data: bytes, body: int, end: int) -> dict[int, list[int]]:
     v, flags, p = _fullbox(data, body)
-
-    def take(n):
-        nonlocal p
-        if p + n > end:
-            raise ValueError("truncated heif ipma")
-        val = int.from_bytes(data[p:p + n], "big")
-        p += n
-        return val
-
+    take = _Reader(data, p, end, "ipma").take
     count = take(4)
     assoc: dict[int, list[int]] = {}
     for _ in range(count):
@@ -175,18 +175,11 @@ def _parse_iref(data: bytes, body: int, end: int) -> dict[tuple[bytes, int], lis
     """iref -> {(ref_type, from_item): [to_items...]}."""
     v, _flags, p = _fullbox(data, body)
     wid = 2 if v == 0 else 4
-    fmt = ">H" if v == 0 else ">I"
     refs: dict[tuple[bytes, int], list[int]] = {}
     for tag, b, e in _boxes(data, p, end):
-        if b + wid + 2 > e:
-            raise ValueError("truncated heif iref")
-        (from_id,) = struct.unpack_from(fmt, data, b)
-        (n,) = struct.unpack_from(">H", data, b + wid)
-        q = b + wid + 2
-        if q + n * wid > e:
-            raise ValueError("truncated heif iref")
-        to = [struct.unpack_from(fmt, data, q + i * wid)[0] for i in range(n)]
-        refs[(tag, from_id)] = to
+        take = _Reader(data, b, e, "iref").take
+        from_id = take(wid)
+        refs[(tag, from_id)] = [take(wid) for _ in range(take(2))]
     return refs
 
 
