@@ -9,9 +9,10 @@ Scale design (SURVEY.md §4):
   but correlates with payload bytes. Heavy rows
   (``length(html) > salt_heavy_bytes``) are range-spread to ~one per
   partition in the lowest partition ids, which are scheduled FIRST,
-  while light rows use plain hash(url) — AQE cannot rebalance inside a
-  mapInPandas stage, so this is manual (a 100× skew row otherwise pins
-  one executor at the end of the stage).
+  while light rows use plain hash(url), or only the heavy-free
+  partitions when that shortens the critical path — AQE cannot
+  rebalance inside a mapInPandas stage, so this is manual (a 100× skew
+  row otherwise pins one executor at the end of the stage).
 - **One Python task per core**: a Python task costs 0.15-0.3 s of
   worker CPU before it does any work (PySpark re-reads ``pyspark.zip``
   per task; see spark/checkpoint.py), more than a median page's
@@ -44,15 +45,8 @@ from ragflow_ocr_spark.spark.stages import (
 )
 
 
-def _is_heavy(cfg: PipelineConfig):
-    return F.coalesce(F.length(F.col("html")), F.lit(0)) > cfg.salt_heavy_bytes
-
-
 def spread_for_extract(
-    df: DataFrame,
-    n_partitions: int,
-    cfg: PipelineConfig = DEFAULT,
-    heavy_keys: list[int] | None = None,
+    df: DataFrame, n_partitions: int, cfg: PipelineConfig = DEFAULT
 ) -> DataFrame:
     """Distribute rows over exactly ``n_partitions`` partitions, in one
     exchange, so heavy payloads can't gang up on one task.
@@ -63,24 +57,27 @@ def spread_for_extract(
     of heavy rows is comparable to the number of partitions (the
     painful regime — each one is ~100× a median row), balls-in-bins
     puts 2-3 in one partition and zero in others. So each heavy row
-    gets the index of its equal-count range over the sorted heavy
-    ``xxhash64(url)`` keys: with H heavy rows and m = min(n, H), the
-    row of rank r goes to partition floor(r·m/H) — at most ceil(H/n)
-    heavy rows per partition, and they fill the LOWEST partition ids,
-    which the scheduler issues first. Light rows go to
-    ``pmod(hash(url), n)``. ``repartitionById`` then places every row
+    gets the index of its equal-count range over the heavy
+    ``xxhash64(url)`` keys: the n-1 bounds are the keys at ranks
+    ceil(i·H/n), and a heavy row's partition is the number of distinct
+    bounds below its key — ceil(H/n) heavy rows per partition at most,
+    one each when H < n, in the LOWEST partition ids, which the
+    scheduler issues first. ``repartitionById`` then places every row
     in its partition with one shuffle. Placement never affects output
     bytes — rows are independent (verified by the
     repartition-invariance test).
 
-    ``heavy_keys`` are the heavy rows' ``xxhash64(url)`` values;
-    ``run_extract_job`` gathers them for every group in its one
-    planning scan. Without them they are collected here, one job. The
-    driver holds one 8-byte key per heavy row: a heavy row carries
-    more than ``salt_heavy_bytes`` of payload, so the keys are at most
-    1/2048 of the payload bytes at the 16 KiB default, and in practice
-    far less (heavy rows are the rare skew tail). A key the list
-    misses still lands in a valid partition; only balance suffers.
+    Light rows go to ``pmod(hash(url), n)``, except when the m = H < n
+    heavy rows leave partitions free and light rows are few: then they
+    go to the n-m free partitions only. Payload bytes stand in for cost
+    (as in the heavy predicate): with b the largest heavy payload and L
+    the light bytes, the critical path is about b + L/n if light rows
+    share the heavy partitions and max(b, L/(n-m)) if they avoid them;
+    the smaller one is taken.
+
+    The bounds come from one JVM aggregate over ``df``
+    (``percentile_approx``, rank error ≤ H/10000, exact for small H):
+    the driver receives n-1 keys and three counters, whatever H is.
 
     Cost note: exactly ``n_partitions`` Python tasks run the extract
     stage; with ``n_partitions = defaultParallelism`` that is one per
@@ -90,21 +87,32 @@ def spread_for_extract(
     2n) and nothing else on the job path may be a Python-RDD
     DataFrame.
     """
-    heavy = _is_heavy(cfg)
+    n = n_partitions
+    size = F.coalesce(F.length(F.col("html")), F.lit(0))
+    heavy = size > cfg.salt_heavy_bytes
     key = F.xxhash64(F.col("url"))
-    if heavy_keys is None:
-        heavy_keys = [r[0] for r in df.where(heavy).select(key).collect()]
-    keys = sorted(heavy_keys)
-    pid = F.pmod(F.hash(F.col("url")), F.lit(n_partitions))
-    if keys:
-        m = min(n_partitions, len(keys))
-        # partition i starts at heavy rank ceil(i·H/m); a heavy row's
-        # partition is the number of range starts at or below its key
-        starts = F.array(
-            *[F.lit(keys[-(-i * len(keys) // m)]).cast("long") for i in range(1, m)]
-        )
-        pid = F.when(heavy, F.size(F.filter(starts, lambda b: b <= key))).otherwise(pid)
-    return df.repartitionById(n_partitions, pid)
+    ranks = [i / n for i in range(1, n)]
+    stats = df.agg(
+        F.count(F.when(heavy, 1)).alias("h"),
+        F.max(F.when(heavy, size)).alias("heavy_max"),
+        F.sum(F.when(~heavy, size)).alias("light_bytes"),
+        (
+            F.array_distinct(F.percentile_approx(F.when(heavy, key), ranks))
+            if ranks
+            else F.array().cast("array<bigint>")
+        ).alias("bounds"),
+    ).first()
+    m = min(n, stats["h"])
+    light = F.pmod(F.hash(F.col("url")), F.lit(n))
+    if 0 < m < n:
+        b, lb = stats["heavy_max"], stats["light_bytes"] or 0
+        if max(b, lb / (n - m)) < b + lb / n:
+            light = F.lit(m) + F.pmod(F.hash(F.col("url")), F.lit(n - m))
+    pid = light
+    if m:
+        bounds = F.array(*[F.lit(k).cast("long") for k in stats["bounds"] or []])
+        pid = F.when(heavy, F.size(F.filter(bounds, lambda k: k < key))).otherwise(light)
+    return df.repartitionById(n, pid)
 
 
 def extract(
@@ -155,16 +163,15 @@ def run_extract_job(
     ``bucket(url, n_buckets)``, so each scan additionally prunes to
     the group's files — see spark/checkpoint.py).
 
-    Planning is one scan of the pending pages that returns, per
-    pending bucket, the ``xxhash64(url)`` keys of its heavy rows; with
-    ``spread=True`` each group is then scanned once more, by its
-    extract job, and spread over ``defaultParallelism`` partitions in
-    one exchange using those keys (``spread_for_extract``). The heavy
-    predicate is ``length(html)``, so the payload column is read by the
-    planning scan once per run and by each group's extract job — no
-    sampling job and no second heavy/light scan per group. The group
-    size is the classic durability/throughput knob: lost work on
-    failure ≤ one group, scan overhead ∝ 1/group_size. Within a group,
+    Planning is one scan of the pending pages for their distinct
+    bucket ids. With ``spread=True`` each group is spread over
+    ``defaultParallelism`` partitions in one exchange
+    (``spread_for_extract``), whose range bounds cost one JVM aggregate
+    over the group (n-1 keys back to the driver); at Iceberg scale its
+    heavy predicate would read a stored ``content_length`` column, not
+    the payload. The group size is the classic durability/throughput
+    knob: lost work on failure ≤ one group, scan overhead ∝
+    1/group_size. Within a group,
     output lands via dynamic partition overwrite under
     ``extracted/bucket=<b>`` — rewriting a group is idempotent
     (MERGE-on-key semantics).
@@ -186,14 +193,9 @@ def run_extract_job(
     done = [r["bucket"] for r in ckpt.done_buckets(n_buckets).collect()]
     pending = work.where(~F.col("bucket").isin(done))
 
-    heavy_key = F.when(_is_heavy(cfg), F.xxhash64(F.col("url")))
-    heavy_by_bucket = {
-        r["bucket"]: r["heavy"]
-        for r in pending.groupBy("bucket")
-        .agg(F.collect_list(heavy_key).alias("heavy"))
-        .collect()
-    }
-    pending_buckets = sorted(heavy_by_bucket)
+    pending_buckets = sorted(
+        r["bucket"] for r in pending.select("bucket").distinct().collect()
+    )
     gs = max(1, bucket_group_size)
     groups = [pending_buckets[i : i + gs] for i in range(0, len(pending_buckets), gs)]
 
@@ -208,7 +210,7 @@ def run_extract_job(
     n_processed = 0
     try:
         _run_groups(
-            spark, ckpt, groups, pending, heavy_by_bucket, run_id, n_buckets,
+            spark, ckpt, groups, pending, run_id, n_buckets,
             cfg, fail_buckets, spread, out_root,
         )
         n_processed = sum(len(g) for g in groups)
@@ -227,7 +229,7 @@ def run_extract_job(
 
 
 def _run_groups(
-    spark, ckpt, groups, pending, heavy_by_bucket, run_id, n_buckets,
+    spark, ckpt, groups, pending, run_id, n_buckets,
     cfg, fail_buckets, spread, out_root,
 ) -> None:
     import json
@@ -236,8 +238,7 @@ def _run_groups(
         gdf = pending.where(F.col("bucket").isin([int(b) for b in group]))
         if spread:
             gdf = spread_for_extract(
-                gdf, spark.sparkContext.defaultParallelism, cfg,
-                heavy_keys=[k for b in group for k in heavy_by_bucket[b]],
+                gdf, spark.sparkContext.defaultParallelism, cfg
             )
         out = gdf.select("url", "warc_ts", "lang", "html", "bucket").mapInPandas(
             extract_stage_with_metrics(cfg, run_id, with_buckets=True),

@@ -167,6 +167,45 @@ def test_spread_is_one_exchange_of_n_partitions(truth, n):
     assert spread_for_extract(pages, n).rdd.getNumPartitions() == n
 
 
+@pytest.mark.parametrize(
+    "n_heavy, n_light, light_bytes, light_avoids_heavy",
+    [
+        (2, 40, 100, True),  # heavy rows dominate: light rows skip their partitions
+        (3, 60, 8000, False),  # light bytes dominate: light rows use every partition
+    ],
+)
+def test_spread_fewer_heavy_rows_than_partitions(
+    spark, n_heavy, n_light, light_bytes, light_avoids_heavy
+):
+    """With H < n heavy rows each gets its own partition among the
+    lowest ids; light rows leave those partitions alone only when the
+    heavy-free ones can carry the light bytes in less than a heavy
+    payload plus its light share."""
+    from ragflow_ocr_spark.config import DEFAULT
+    from ragflow_ocr_spark.spark.pipeline import spread_for_extract
+
+    n = 4
+    heavy_html = "h" * (DEFAULT.salt_heavy_bytes + 1000)
+    rows = [(f"https://heavy.example/{i}", heavy_html) for i in range(n_heavy)] + [
+        (f"https://light.example/{i}", "l" * light_bytes) for i in range(n_light)
+    ]
+    df = spark.createDataFrame(rows, "url string, html string")
+    spread = spread_for_extract(df, n)
+    assert spread.rdd.getNumPartitions() == n
+    tagged = spread.select(
+        F.col("url").startswith("https://heavy").alias("heavy"),
+        F.spark_partition_id().alias("pid"),
+    ).collect()
+    assert len(tagged) == n_heavy + n_light
+    heavy_pids = sorted(r["pid"] for r in tagged if r["heavy"])
+    assert heavy_pids == list(range(n_heavy))
+    light_pids = {r["pid"] for r in tagged if not r["heavy"]}
+    if light_avoids_heavy:
+        assert light_pids == set(range(n_heavy, n)), light_pids
+    else:
+        assert light_pids == set(range(n)), light_pids
+
+
 def test_semantic_truth_at_1000_rows(spark):
     """Constructive-truth byte-identity at 5× the golden corpus size —
     more rng draws hit more glyph/layout/boilerplate branches than the
