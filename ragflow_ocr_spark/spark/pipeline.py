@@ -60,9 +60,10 @@ def spread_for_extract(
     gets the index of its equal-count range over the heavy
     ``xxhash64(url)`` keys: the n-1 bounds are the keys at ranks
     ceil(i·H/n), and a heavy row's partition is the number of distinct
-    bounds below its key — ceil(H/n) heavy rows per partition at most,
-    one each when H < n, in the LOWEST partition ids, which the
-    scheduler issues first. ``repartitionById`` then places every row
+    bounds below its key — ceil(H/n) heavy rows per partition at most
+    (up to the rank error below), one each when H < n, in the LOWEST
+    partition ids, which the scheduler issues first.
+    ``repartitionById`` then places every row
     in its partition with one shuffle. Placement never affects output
     bytes — rows are independent (verified by the
     repartition-invariance test).
